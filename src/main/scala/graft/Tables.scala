@@ -166,9 +166,21 @@ object Tables {
     * pins to the SAME size-derived nParts, so runtime coalescing is a
     * no-op — but its stage-by-stage materialization still charges the
     * per-job floor per exchange. With the regime a round's checkpoint
-    * is ONE job. Setup (edge/node checkpoints embedding corpus-scale
-    * feeding queries) stays OUTSIDE the regime so big one-off shuffles
-    * keep AQE coalescing and skew handling.
+    * is ONE job.
+    *
+    * The regime also decides what a checkpoint remembers. Under AQE
+    * the plan a cut executes reports no output partitioning, so the
+    * cut's scan is `UnknownPartitioning` and every later join on it
+    * re-shuffles it; a cut taken inside the regime keeps its hash
+    * layout (key, `parts`). Setup cuts that rounds join on their key
+    * therefore belong inside the regime too (PageRank's edge and node
+    * tables, `Graph.rankSetup`), at the price of fixed-width setup
+    * shuffles without AQE's skew handling. Let the key exchange of a
+    * groupBy or window set that layout rather than a trailing
+    * `repartition(parts, key)`: at width 1 that reports
+    * `SinglePartition`, which the planner does not count as
+    * co-partitioned with an aggregated join side, so it re-shuffles
+    * both sides of that join every round.
     *
     * Scale honesty: the width is derived from data bytes
     * ([[adaptiveParts]]), not from local core count, so the regime is

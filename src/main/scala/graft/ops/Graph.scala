@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,129 +10,177 @@ import graft.{Queries, Tables}
   * signal for corpus curation (rank-weighted sampling, spam
   * demotion), composed directly on [[Links.extractLinks]] output.
   *
-  * Iteration shape (the [[Dedup.dedupClusters]] discipline): the edge
-  * list is repartitioned on src and localCheckpoint'ed ONCE; each of
-  * the fixed `iters` rounds is one hash shuffle (contribution sum
-  * grouped by dst) plus a 1-row dangling-mass aggregate that stays IN
-  * PLAN (cross-join of a scalar aggregate — no collect in the data
-  * path), and ends in an EAGER localCheckpoint so the logical plan
-  * never grows with the round count. At 100 TB the per-round cost is
-  * one shuffle of the rank table keyed the same way every round.
+  * Iteration shape: every round is ONE Spark job with ONE shuffle and
+  * no broadcast. Setup cuts the edge list (out-degree attached,
+  * hash-partitioned on src) and the node table (dangling flag,
+  * hash-partitioned on node) ONCE, inside the loop regime
+  * ([[Tables.withIterConf]]) so both checkpoints keep that layout
+  * ([[rankSetup]]); the rank table inherits the node layout round to
+  * round. A round joins edges ⋈ rank and nodes ⋈ contrib where they
+  * already lie and shuffles only the contribution sum grouped by dst
+  * — at 100 TB the per-round cost is that one shuffle, never a
+  * re-shuffle of the edge table. The one scalar a round needs from
+  * the previous one, the dangling mass, is observed
+  * (`Dataset.observe`) on the previous round's own eager
+  * localCheckpoint and enters the round as a literal: no second job,
+  * no 1-row aggregate, no cross join. Each round ends in an EAGER
+  * localCheckpoint, so the logical plan never grows with the round
+  * count.
   *
-  * EAGER, not lazy (r16): a LAZILY-checkpointed round table is first
-  * materialized inside the NEXT round's action, where AQE runs the
-  * broadcast stage (dangling-mass scalar) and the shuffle stage
-  * (contrib join) concurrently — both computing the same
-  * un-materialized checkpoint. That race (a) double-computes the
-  * round and (b) can deadlock outright: `RDD.doCheckpoint` takes
-  * RDDCheckpointData$ then the RDD lock while
-  * `DAGScheduler.getCacheLocs` takes them in the opposite order
-  * (observed as a permanent hang in PlanShapeSpec). Eager
-  * materialization finishes the checkpoint before any concurrent
-  * consumer exists — and measured FASTER suite-wide (the redundant
-  * double-compute dominated the one extra job per round).
+  * EAGER, not lazy: the dangling mass must be read before the next
+  * round is built, and a lazily-checkpointed table first materializes
+  * inside its consumer's action, where concurrent stages over the same
+  * un-materialized checkpoint double-compute it and can deadlock
+  * (`RDD.doCheckpoint` and `DAGScheduler.getCacheLocs` take
+  * RDDCheckpointData$ and the RDD lock in opposite orders — once seen
+  * as a permanent hang in PlanShapeSpec).
   *
   * Fixed iteration count (no convergence test) keeps the run
   * deterministic and lets the DuckDB oracle UNROLL the same `iters`
   * steps from the same constants: same init (uniform 1/n), same
-  * teleport/damping literals, same dangling-mass redistribution, with
-  * the result rounded at the very end only.
+  * teleport/damping literals, same dangling-mass redistribution (the
+  * same `dm / nc` IEEE division, constant-folded), with the result
+  * rounded at the very end only.
   */
 object Graph {
 
   private val Damping = "0.85"
   private val Teleport = "0.15" // 1 - damping, emitted as a literal
+  // lit(double), NOT expr("0.85"): Spark parses a bare decimal literal
+  // as DECIMAL(2,2), which would silently run the whole iteration in
+  // decimal arithmetic while DuckDB runs ::DOUBLE
+  private def d: Column = lit(Damping.toDouble)
+  private def t: Column = lit(Teleport.toDouble)
+
+  /** The checkpointed inputs of a rank loop ([[rankSetup]]): `edges`
+    * (src, dst, od) hash-partitioned on src, `nodes` (node, dang
+    * [, is_seed]) hash-partitioned on node, both `parts` wide; `n` is
+    * the size of the teleport set — every node, or the seeds present
+    * in the graph. */
+  private[graft] case class RankGraph(edges: DataFrame, nodes: DataFrame,
+                                      n: Long, parts: Int)
+
+  /** Setup cuts of [[pageRank]] and [[personalizedPageRank]], taken
+    * INSIDE the loop regime so each checkpoint keeps the hash layout
+    * the rounds join on (under AQE a cut records no output
+    * partitioning and every round would re-shuffle the edge table).
+    * The window over src and the groupBy on node set that layout:
+    * under the regime their exchanges are hash(key, `parts`); see
+    * [[Tables.withIterConf]] for why no trailing repartition.
+    * Out-degree and the dangling flag (a node is dangling iff it
+    * never appears as a src) are iteration-invariant, so they are
+    * attached here once instead of joined every round; `seeds` adds
+    * the personalization flag `is_seed` with one more join, which
+    * keeps the node layout. `n` is observed on the node cut's own
+    * job. */
+  private[graft] def rankSetup(edgeDf: DataFrame, parts: Int,
+                               seeds: Option[DataFrame] = None): RankGraph =
+    Tables.withIterConf(edgeDf.sparkSession, parts) {
+      // out-degree by a window over src: it shuffles on the key the
+      // layout wants anyway, so the edge cut pays one exchange, not a
+      // degree aggregate plus a join. A null src never joins a rank,
+      // so such an edge is no edge.
+      val edges = edgeDf.where(col("src").isNotNull)
+        .select(col("src"), col("dst"),
+                count(lit(1)).over(Window.partitionBy(col("src"))).as("od"))
+        .localCheckpoint()
+      val flagged = edges.select(col("src").as("node"), lit(false).as("dang"))
+        .union(edges.select(col("dst").as("node"), lit(true).as("dang")))
+        .groupBy(col("node")).agg(min(col("dang")).as("dang"))
+      val (nodes, n) = seeds match {
+        case None => observedCut(flagged, count(lit(1)))
+        case Some(s) =>
+          val seedSet = s.select(col("node")).distinct()
+          observedCut(
+            flagged
+              .join(seedSet.select(col("node"), lit(1.0).as("is_seed")),
+                    Seq("node"), "left")
+              .select(col("node"), col("dang"),
+                      coalesce(col("is_seed"), lit(0.0)).as("is_seed")),
+            count(when(col("is_seed") === 1.0, true)))
+      }
+      RankGraph(edges, nodes, n.getLong(0), parts)
+    }
+
+  /** Eager localCheckpoint of `df` plus `metric` aggregated over the
+    * same rows, read from `Dataset.observe` on the checkpoint's own
+    * job — a scalar read back at zero extra jobs. */
+  private def observedCut(df: DataFrame, metric: Column): (DataFrame, Row) = {
+    val watched = df.observe("graft_cut", metric)
+    val cut = watched.localCheckpoint()
+    (cut, watched.queryExecution.observedMetrics("graft_cut"))
+  }
+
+  /** A rank table's eager cut and its dangling mass — the sum of `r`
+    * over the dangling nodes, 0.0 when there are none. The partial
+    * sums of a width > 1 cut merge in task-completion order, so the
+    * last bit of the mass may differ between runs; ranks are reported
+    * at 6 dp. */
+  private[graft] def danglingCut(rank: DataFrame): (DataFrame, Double) = {
+    val (cut, dm) = observedCut(rank,
+      coalesce(sum(when(col("dang"), col("r"))), lit(0.0)))
+    (cut, dm.getDouble(0))
+  }
+
+  /** Runs `iters` rounds from `start` under the loop regime: each
+    * round gets the previous round's rank table and dangling mass,
+    * and its result is cut eagerly. A cut every round, not every
+    * other: a 2-round cadence saved jobs but recomputed more stage
+    * work than it saved (measured and rejected). */
+  private def iterate(g: RankGraph, start: DataFrame, iters: Int)
+                     (round: (DataFrame, Double) => DataFrame): DataFrame =
+    Tables.withIterConf(g.nodes.sparkSession, g.parts) {
+      var (rank, dm) = danglingCut(start)
+      for (_ <- 1 to iters) {
+        val (next, nextDm) = danglingCut(round(rank, dm))
+        rank = next
+        dm = nextDm
+      }
+      rank
+    }
 
   /** PageRank over any (src, dst) string edge DataFrame (parallel
     * edges count once per occurrence): (node, pr) rounded to 6 dp,
     * ordered by node. Nodes = distinct src ∪ dst; nodes with no
     * out-edges are dangling and redistribute their mass uniformly. */
   def pageRank(edgeDf: DataFrame, iters: Int = 10): DataFrame = {
-    val spark = edgeDf.sparkSession
     // size-adaptive iteration width (r16): see [[Tables.adaptiveParts]]
-    val nParts = Tables.adaptiveParts(edgeDf)
-    val outDeg0 = edgeDf.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(count(lit(1)).as("od"))
-    // out-degree is ITERATION-INVARIANT, so it is attached to the edge
-    // table ONCE here instead of re-joined inside every round (r16,
-    // guide §2.4: two operations keyed the same way share one
-    // exchange — ten od joins collapse into one). The division r/od
-    // stays per-edge with the same operands, so the arithmetic is
-    // bit-identical to the unrolled oracle.
-    val edges = edgeDf.select(col("src"), col("dst"))
-      .join(outDeg0, "src")
-      .repartition(nParts, col("src"))
-      .localCheckpoint()
-    // nodes carry the (iteration-invariant) dangling flag — a node is
-    // dangling iff it never appears as a src. Folding the flag into
-    // the node table (and below into the rank table) replaces the
-    // per-round rank⋈danglingNodes join with a flag-filtered partial
-    // aggregate over rank itself (r16: one fewer exchange per round).
-    val nodes = edges.select(col("src").as("node"), lit(false).as("dang"))
-      .union(edges.select(col("dst").as("node"), lit(true).as("dang")))
-      .groupBy(col("node")).agg(min(col("dang")).as("dang"))
-      .repartition(nParts, col("node"))
-      .localCheckpoint()
-    // graph SIZE is computed ONCE outside the loop: nc is bounded
-    // model state (one long, the dedupClusters convergence-scalar
-    // contract)
-    val nc = nodes.count()
+    val g = rankSetup(edgeDf, Tables.adaptiveParts(edgeDf))
+    val nc = g.n
     // empty graph: return the empty (node, pr) frame instead of
     // dividing the uniform init by zero (ANSI mode throws)
-    if (nc == 0) return nodes.select(col("node"), lit(0.0).as("pr"))
-    // per-round EAGER checkpoint: a 2-round cadence was A/B'd and lost
-    // (ProfileOne: 5 fewer jobs but +620 ms of recomputed stage work —
-    // exchange reuse does not cover the round's final co-located join,
-    // which both next-round consumers then re-evaluate). The loop runs
-    // under the fixed-width regime (r17): see [[Tables.withIterConf]].
-    val rank = Tables.withIterConf(spark, nParts) {
-      var r = nodes
-        .select(col("node"), col("dang"), (lit(1.0) / lit(nc)).as("r"))
-        .localCheckpoint()
-      for (_ <- 1 to iters) {
-        r = pageRankRound(nodes, edges, r, nc)
-          .localCheckpoint()
-      }
-      r
-    }
+    if (nc == 0) return g.nodes.select(col("node"), lit(0.0).as("pr"))
+    val start = g.nodes.withColumn("r", lit(1.0) / lit(nc))
+    val rank = iterate(g, start, iters)(pageRankRound(g, _, _))
     rank.select(col("node"), round(col("r"), 6).as("pr")).orderBy("node")
   }
 
-  /** One PageRank power-iteration round, factored out of [[pageRank]]
-    * so its PLAN SHAPE is pinnable (PlanShapeSpec): the final plan of
-    * the full query only shows checkpointed `ExistingRDD` scans, so a
-    * de-broadcast or cartesian regression inside the loop would
-    * otherwise be invisible to a plan assert. Shape contract: contrib
-    * is one equi-join + map-side-combined partial sum; the dangling
-    * mass is a 1-ROW aggregate riding a deliberate broadcast
-    * nested-loop cross (bounded — one row by construction); never a
-    * CartesianProduct. */
-  private[graft] def pageRankRound(nodes: DataFrame, edges: DataFrame,
-                                   rank: DataFrame, nc: Long): DataFrame = {
-    // lit(double), NOT expr("0.85"): Spark parses a bare decimal
-    // literal as DECIMAL(2,2), which would silently run the whole
-    // iteration in decimal arithmetic while DuckDB runs ::DOUBLE
-    val d = lit(Damping.toDouble)
-    val t = lit(Teleport.toDouble)
-    // `edges` arrives with the out-degree pre-attached (see
-    // [[pageRank]]): one equi-join + map-side-combined partial sum
-    val contrib = edges
-      .join(rank, edges("src") === rank("node"))
+  /** One PageRank power-iteration round over the previous `rank`
+    * (node, dang, r) and its dangling mass `dm`, factored out of
+    * [[pageRank]] so its PLAN SHAPE is pinnable (PlanShapeSpec): the
+    * final plan of the full query only shows checkpointed
+    * `ExistingRDD` scans. Shape contract on the [[rankSetup]] layout:
+    * one shuffle (contrib by dst); edges ⋈ rank and nodes ⋈ contrib
+    * join in place, shuffled-hash (no sort, and never a broadcast of
+    * either side); no nested-loop or cartesian join. */
+  private[graft] def pageRankRound(g: RankGraph, rank: DataFrame,
+                                   dm: Double): DataFrame =
+    rankRound(g, rank)(c => t / lit(g.n) + d * (c + lit(dm) / lit(g.n)))
+
+  /** The round body shared by both rank loops: the nodes' columns plus
+    * `r = update(contrib)`, contrib the rank flowing in over in-edges
+    * (0.0 for none). */
+  private def rankRound(g: RankGraph, rank: DataFrame)
+                       (update: Column => Column): DataFrame = {
+    val contrib = g.edges
+      .join(rank.select(col("node"), col("r")).hint("shuffle_hash"),
+            col("src") === col("node"))
       .select(col("dst"), (col("r") / col("od")).as("c"))
       .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
-    // dangling mass: flag-filtered partial aggregate over the rank
-    // table itself (rank carries the iteration-invariant `dang` flag)
-    // — no join; the filter keeps the summed term set identical to
-    // the old rank⋈danglingNodes form
-    val dangling = rank.where(col("dang"))
-      .agg(coalesce(sum(col("r")), lit(0.0)).as("dm"))
-    nodes
-      .join(contrib, nodes("node") === contrib("dst"), "left")
-      .crossJoin(broadcast(dangling))
-      .select(col("node"), col("dang"),
-              (t / lit(nc) +
-                d * (coalesce(col("contrib"), lit(0.0)) +
-                      col("dm") / lit(nc))).as("r"))
+    g.nodes
+      .join(contrib.hint("shuffle_hash"), col("node") === col("dst"), "left")
+      .select(g.nodes.columns.map(col) :+
+              update(coalesce(col("contrib"), lit(0.0))).as("r"): _*)
   }
 
   /** Personalized PageRank: [[pageRank]] with the teleport vector
@@ -144,67 +192,19 @@ object Graph {
     * unreachable from any seed get EXACTLY 0 (no uniform floor —
     * that separation is the point of personalization).
     *
-    * Same iteration discipline and oracle story as [[pageRank]]:
-    * fixed rounds, edges/nodes/dangling checkpointed once, the
-    * dangling-mass scalar in-plan, per-round eager checkpoints; the
-    * seed flag is one broadcast semi-join at setup. `seeds` is a
-    * (node) DataFrame; ids absent from the graph are ignored. */
+    * Same setup, rounds and oracle story as [[pageRank]]; the seed
+    * flag is one more setup join. `seeds` is a (node) DataFrame; ids
+    * absent from the graph are ignored. */
   def personalizedPageRank(edgeDf: DataFrame, seeds: DataFrame,
                            iters: Int = 10): DataFrame = {
-    val spark = edgeDf.sparkSession
-    // size-adaptive iteration width (r16): see [[Tables.adaptiveParts]]
-    val nParts = Tables.adaptiveParts(edgeDf)
-    val outDeg0 = edgeDf.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(count(lit(1)).as("od"))
-    // out-degree attached to the edge table ONCE (the r16 [[pageRank]]
-    // treatment): ten in-loop od joins collapse into one setup join;
-    // r/od operands unchanged, so the oracle arithmetic is identical
-    val edges = edgeDf.select(col("src"), col("dst"))
-      .join(outDeg0, "src")
-      .repartition(nParts, col("src"))
-      .localCheckpoint()
-    val nodes0 = edges.select(col("src").as("node"), lit(false).as("dang"))
-      .union(edges.select(col("dst").as("node"), lit(true).as("dang")))
-      .groupBy(col("node")).agg(min(col("dang")).as("dang"))
-      .repartition(nParts, col("node"))
-    val seedSet = seeds.select(col("node")).distinct()
-    // nodes carry BOTH iteration-invariant flags: the seed indicator
-    // and the dangling flag (no out-edges) — the per-round dangling
-    // join becomes a flag-filtered aggregate over rank (r16)
-    val nodes = nodes0
-      .join(seedSet.select(col("node"), lit(1.0).as("is_seed")),
-            Seq("node"), "left")
-      .select(col("node"), col("dang"),
-              coalesce(col("is_seed"), lit(0.0)).as("is_seed"))
-      .localCheckpoint()
-    // |S| is bounded model state (one long), like pageRank's nc
-    val ns = nodes.where(col("is_seed") === 1.0).count()
-    if (ns == 0) return nodes.select(col("node"), lit(0.0).as("pr"))
+    val g = rankSetup(edgeDf, Tables.adaptiveParts(edgeDf), Some(seeds))
+    val ns = g.n
+    if (ns == 0) return g.nodes.select(col("node"), lit(0.0).as("pr"))
       .orderBy("node")
-    val d = lit(Damping.toDouble)
-    val t = lit(Teleport.toDouble)
-    // fixed-width loop regime (r17): see [[Tables.withIterConf]]
-    val rank = Tables.withIterConf(spark, nParts) {
-      var r0 = nodes
-        .select(col("node"), col("dang"), col("is_seed"),
-                (col("is_seed") / lit(ns)).as("r"))
-        .localCheckpoint()
-      for (_ <- 1 to iters) {
-        val contrib = edges
-          .join(r0, edges("src") === r0("node"))
-          .select(col("dst"), (col("r") / col("od")).as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
-        val dangling = r0.where(col("dang"))
-          .agg(coalesce(sum(col("r")), lit(0.0)).as("dm"))
-        r0 = nodes
-          .join(contrib, nodes("node") === contrib("dst"), "left")
-          .crossJoin(broadcast(dangling))
-          .select(col("node"), col("dang"), col("is_seed"),
-                  ((t + d * col("dm")) * col("is_seed") / lit(ns) +
-                    d * coalesce(col("contrib"), lit(0.0))).as("r"))
-          .localCheckpoint()
-      }
-      r0
+    val start = g.nodes.withColumn("r", col("is_seed") / lit(ns))
+    val rank = iterate(g, start, iters) { (r, dm) =>
+      rankRound(g, r)(c =>
+        (t + d * lit(dm)) * col("is_seed") / lit(ns) + d * c)
     }
     rank.select(col("node"), round(col("r"), 6).as("pr")).orderBy("node")
   }

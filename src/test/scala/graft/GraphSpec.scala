@@ -1,5 +1,13 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,6 +45,106 @@ class GraphSpec extends AnyFunSuite {
     // only receive — their update is symmetric, ranks equal
     val star = ranks(Seq("a" -> "b", "a" -> "c"))
     assert(math.abs(star("b") - star("c")) < 1e-12)
+  }
+
+  // ---------------------------------------------------------------
+  // The rank loops' execution contract: the setup cuts keep the hash
+  // layout the rounds join on, the dangling mass rides each round's
+  // own cut, and a round is one job.
+  // ---------------------------------------------------------------
+
+  // d and f are dangling; e has no in-edges
+  private val rankEdges = Seq("a" -> "b", "a" -> "c", "b" -> "c", "c" -> "a",
+                              "c" -> "d", "c" -> "f", "e" -> "a")
+
+  private def layout(df: DataFrame): Partitioning =
+    df.queryExecution.analyzed match {
+      case r: LogicalRDD => r.outputPartitioning
+      case other => fail(s"not a checkpoint:\n$other")
+    }
+
+  private def hashOn(p: Partitioning, key: String, width: Int): Boolean =
+    p match {
+      case HashPartitioning(Seq(a: AttributeReference), n) =>
+        a.name == key && n == width
+      case _ => false
+    }
+
+  /** Jobs started while `body` runs, counted by a SparkListener on a
+    * job group of their own. */
+  private def jobsStarted(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"graph-spec-${System.nanoTime}"
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    try body
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("rank setup: the edge and node cuts keep their hash layout at width 4") {
+    val edges = rankEdges.toDF("src", "dst")
+    val g = Graph.rankSetup(edges, 4)
+    assert(hashOn(layout(g.edges), "src", 4), layout(g.edges))
+    assert(hashOn(layout(g.nodes), "node", 4), layout(g.nodes))
+    assert(g.n == 6)
+    // the personalized setup's seed join keeps the node layout; seeds
+    // absent from the graph do not count
+    val p = Graph.rankSetup(edges, 4, Some(Seq("a", "zz").toDF("node")))
+    assert(hashOn(layout(p.nodes), "node", 4), layout(p.nodes))
+    assert(p.n == 1)
+  }
+
+  test("rank rounds: the observed dangling mass equals a sum over the same cut at width 4") {
+    val g = Graph.rankSetup(rankEdges.toDF("src", "dst"), 4)
+    def summed(rank: DataFrame): Double = rank.where(col("dang"))
+      .agg(coalesce(sum(col("r")), lit(0.0))).head.getDouble(0)
+    // two dangling terms: IEEE addition commutes, so the order in which
+    // the observed partial sums merge cannot change the total
+    var (rank, dm) = Graph.danglingCut(g.nodes.withColumn("r", lit(1.0 / 6)))
+    assert(dm == summed(rank) && dm == 2 * (1.0 / 6))
+    for (_ <- 1 to 3) {
+      val (next, nextDm) = Tables.withIterConf(spark, 4) {
+        Graph.danglingCut(Graph.pageRankRound(g, rank, dm))
+      }
+      assert(nextDm == summed(next), s"observed $nextDm")
+      rank = next
+      dm = nextDm
+    }
+    // no dangling node: the mass is 0.0, not null
+    val cycle = Graph.rankSetup(Seq("a" -> "b", "b" -> "a").toDF("src", "dst"), 4)
+    assert(Graph.danglingCut(cycle.nodes.withColumn("r", lit(0.5)))._2 == 0.0)
+  }
+
+  test("pageRank and personalizedPageRank: setup jobs plus exactly one job per round") {
+    val edges = rankEdges.toDF("src", "dst")
+    // three setup cuts: edges, nodes, starting ranks
+    for (iters <- Seq(1, 4))
+      assert(jobsStarted(Graph.pageRank(edges, iters)) == 3 + iters, s"iters=$iters")
+    val seeds = Seq("a").toDF("node")
+    val ppr = (1 to 2).map(k => jobsStarted(
+      Graph.personalizedPageRank(edges, seeds, iters = 3 * k)))
+    assert(ppr(1) - ppr(0) == 3, ppr)
+  }
+
+  test("pageRank: the AQE opt-out (spark.graft.iter.aqe) gives the same ranks") {
+    val edges = rankEdges.toDF("src", "dst")
+    val fixed = Graph.pageRank(edges, 4).collect().toSeq
+    spark.conf.set("spark.graft.iter.aqe", "true")
+    val aqe = try Graph.pageRank(edges, 4).collect().toSeq
+              finally spark.conf.unset("spark.graft.iter.aqe")
+    assert(aqe == fixed)
   }
 
   test("hits: bipartite graph separates pure hubs from pure authorities; L1 mass = 1") {

@@ -482,29 +482,46 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("WindowExec"), p)
   }
 
-  test("PageRank round: contrib is equi-join + partial sum; dangling mass is the 1-row broadcast cross") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, count, lit}
+  test("PageRank round: one shuffle (contrib by dst), no broadcast, joins in place") {
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec,
+      RDDScanExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     val (edges0, _) = roundFixture
-    // r16 round contract: edges arrive with out-degree pre-attached,
-    // nodes/rank carry the iteration-invariant dangling flag — the od
-    // join and the dangling join are paid once at setup, not per round
-    val outDeg = edges0.groupBy(col("src"))
-      .agg(count(lit(1)).as("od"))
-    val edges = edges0.join(outDeg, "src")
-    val nodes = Seq((1L, false), (2L, false), (3L, false), (4L, true))
-      .toDF("node", "dang")
-    val rank = nodes.select(col("node"), col("dang"), lit(0.25).as("r"))
-    val p = graft.ops.Graph
-      .pageRankRound(nodes, edges, rank, 4L)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("partial_sum"), p)
-    // exactly ONE equi-join feeds the contribution sum: the in-loop
-    // out-degree join must not come back
-    // the deliberate 1-row dangling-mass cross must ride a BROADCAST
-    // nested loop (bounded side), never a CartesianProduct
-    assert(p.contains("BroadcastNestedLoopJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
+    // width-4 fixture through the REAL setup cuts, so edges, nodes and
+    // rank carry the hash layout the loop gives them
+    val g = graft.ops.Graph.rankSetup(edges0, 4)
+    val (rank, dm) = graft.ops.Graph.danglingCut(
+      g.nodes.withColumn("r", lit(0.25)))
+    val p = Tables.withIterConf(spark, 4) {
+      graft.ops.Graph.pageRankRound(g, rank, dm).queryExecution.executedPlan
+    }
+    val s = p.toString
+    assert(s.contains("partial_sum"), s)
+    // the dangling mass arrives as a literal: no broadcast of either
+    // join side, no 1-row cross join
+    assert(!s.contains("BroadcastExchange")
+      && !s.contains("BroadcastNestedLoopJoin")
+      && !s.contains("CartesianProduct"), s)
+    // no checkpointed input is re-shuffled: no Exchange sits on an
+    // ExistingRDD scan with only projections and filters between them
+    def scanBelow(n: SparkPlan): Boolean = n match {
+      case _: RDDScanExec => true
+      case _: WholeStageCodegenExec | _: InputAdapter | _: ProjectExec |
+           _: FilterExec => scanBelow(n.children.head)
+      case _ => false
+    }
+    val exchanges = p.collect { case e: Exchange => e }
+    assert(!exchanges.exists(e => scanBelow(e.child)), s)
+    // exactly one Exchange: the contribution sum grouped by dst
+    assert(exchanges.size == 1, s)
+    exchanges.head.outputPartitioning match {
+      case HashPartitioning(Seq(a: AttributeReference), 4) =>
+        assert(a.name == "dst", s)
+      case other => fail(s"unexpected contrib exchange $other:\n$s")
+    }
   }
 
   test("iterative queries: checkpointed lineage + no cartesian in the final plans") {
